@@ -93,12 +93,6 @@ def generate_repos_pdf(
     return pd.DataFrame(rows)
 
 
-def generate_repos_df(spark, **kwargs):
-    """Spark DataFrame wrapper (Arrow createDataFrame path)."""
-    pdf = generate_repos_pdf(**kwargs)
-    return spark.createDataFrame(pdf)
-
-
 def expected_sha256(pdf: pd.DataFrame) -> pd.Series:
     """Generation-time sha256(content) for the per-row ingest invariant
     (BASELINE.json:input_hint)."""

@@ -144,19 +144,6 @@ def lsh_bucket_expr(vec_col, planes: np.ndarray):
     return out
 
 
-def target_buckets(
-    target: list[float], n_planes: int = 8, n_bands: int = 4, seed: int = 42
-) -> list[int]:
-    """Per-band LSH bucket ids of a probe vector (driver-side numpy —
-    the probe is a single vector)."""
-    tnp = np.asarray(target, dtype=float)
-    out = []
-    for band in range(n_bands):
-        planes = _hyperplanes(len(target), n_planes, seed + band)
-        out.append(int(sum((1 << i) for i, h in enumerate(planes) if tnp @ h >= 0)))
-    return out
-
-
 def target_buckets_multiprobe(
     target: list[float],
     n_planes: int = 8,

@@ -41,13 +41,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from graphanalytics_spark.graph import symmetrize
 from graphanalytics_spark.plans.truncate import LineageTruncator
 
+HARD_EVERY = 4  # hard parquet reset cadence
+
 
 def greedy_coloring(
     spark: SparkSession,
     edges_canon: DataFrame,
     seed: int = 42,
     max_rounds: int = 200,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Proper distance-1 coloring: DataFrame(vid: long, color: int ≥ 0).
     Deterministic for a given seed. Colors are first-fit (Grundy) w.r.t.
@@ -58,7 +59,7 @@ def greedy_coloring(
         "vid",
         F.pmod(F.xxhash64("vid", F.lit(seed)), F.lit(1 << 40)).alias("prio"),
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=HARD_EVERY)
 
     uncolored = prio.localCheckpoint(eager=True)
     colored = spark.createDataFrame([], "vid long, color int")

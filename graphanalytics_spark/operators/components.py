@@ -14,8 +14,8 @@ Each round:
 2. pointer jumping: label''(v) = label(label'(v)) — a self-join that
    halves tree heights, giving O(log diameter) total rounds instead of
    O(diameter).
-Stop when no label changed. Lineage is truncated with localCheckpoint every
-``checkpoint_every`` rounds — mandatory for iterative Spark plans.
+Stop when no label changed. Lineage is truncated every round
+(plans/superstep.py) — mandatory for iterative Spark plans.
 
 Scale: the edge table is partitioned on src once and persisted; the state
 table is the only per-round shuffle. At 10^12 edges this is the classic
@@ -25,20 +25,27 @@ even for path-like graphs.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep, shuffle_partitions
+
+# Hard parquet reset every 8 rounds (was 5): the every-2-round stop-test
+# count already finalizes the lazy localCheckpoints, so more frequent hard
+# resets only added parquet round-trips (order-balanced 5-vs-8 A/B: wash
+# at sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7, under
+# the measured ~9-link planning-degradation onset)
+HARD_EVERY = 8
+
+
+def _components(state: DataFrame) -> DataFrame:
+    return state.select("vid", F.col("label").alias("component"))
 
 
 def connected_components(
     spark: SparkSession,
     edges_canon: DataFrame,
     max_iter: int = 50,
-    checkpoint_every: int = 8,
-    partitions: int | None = None,
     metrics=None,
     initial_state: DataFrame | None = None,
     checkpointer=None,
@@ -53,45 +60,30 @@ def connected_components(
     ``check_every``: the no-change stop test runs every k rounds (same
     driver-action economics as pagerank — min-label sweeps are idempotent
     on a converged state, so up to k-1 extra no-op rounds are the only
-    cost; exactness is unaffected). Unchecked rounds record changed=-1 in
-    metrics."""
-    sym = symmetrize(edges_canon).select("src", "dst")
-    if partitions is None:
-        try:
-            partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            partitions = spark.sparkContext.defaultParallelism
-    if partitions:
-        # static side partitioned on the gather key once — per round only
-        # the vertex-state table is exchanged (same policy as pagerank)
-        sym = sym.repartition(partitions, "src")
-    sym = sym.persist()
+    cost; exactness is unaffected). A run that reaches ``max_iter`` with
+    labels still changing warns (plans/superstep.py)."""
+    # static side partitioned on the gather key once — per round only the
+    # vertex-state table is exchanged (same policy as pagerank)
+    sym = (
+        symmetrize(edges_canon)
+        .select("src", "dst")
+        .repartition(shuffle_partitions(spark), "src")
+        .persist()
+    )
     n_edges = sym.count()
-    # hard cadence 8 (was 5): the every-2-round stop-test count already
-    # finalizes the lazy localCheckpoints, so more frequent hard resets
-    # only added parquet round-trips (order-balanced 5-vs-8 A/B: wash at
-    # sf0.1, strictly fewer V-sized writes at scale; chains stay ≤ 7,
-    # under the measured ~9-link planning-degradation onset)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
-    check_every = max(1, check_every)
 
     if initial_state is not None:
         cols = initial_state.columns
         label_col = "label" if "label" in cols else "component"
-        state = initial_state.select(
-            "vid", F.col(label_col).alias("label")
-        ).persist()
+        state = initial_state.select("vid", F.col(label_col).alias("label"))
     else:
         state = (
             sym.select(F.col("src").alias("vid"))
             .distinct()
             .select("vid", F.col("vid").alias("label"))
-            .persist()
         )
-    init_state = state
 
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(state, _it):
         # 1) neighbor min
         nbr_min = (
             sym.join(state, sym.src == state.vid)
@@ -119,32 +111,24 @@ def connected_components(
                 ),
             )
         )
-        new_state = jumped.select(
+        return jumped.select(
             "vid",
             F.col("new_label").alias("label"),
             (F.col("new_label") != F.col("old")).alias("changed"),
         )
-        # per-iteration lineage truncation (plans/truncate.py: lazy
-        # localCheckpoint piggybacking on the count below + periodic hard
-        # parquet reset — chained localCheckpoints alone still degrade
-        # exponentially in Spark 4.1)
-        new_state = truncator.truncate(new_state, it, stream="state")
-        n_changed = -1
-        if it % check_every == 0 or it == max_iter:
-            n_changed = new_state.filter("changed").count()
-        state = new_state.drop("changed")
-        if metrics is not None:
-            metrics.add(it, float(n_changed), n_edges, time.monotonic() - t0)
-        if checkpointer is not None:
-            checkpointer.maybe_save(
-                it, state.select("vid", F.col("label").alias("component")),
-                float(n_changed),
-            )
-        if n_changed == 0:
-            break
-    init_state.unpersist()
-    sym.unpersist()
-    return state.select("vid", F.col("label").alias("component"))
+
+    state = Superstep(spark, "connected_components", HARD_EVERY, check_every).run(
+        state.persist(),
+        step,
+        max_iter,
+        measure=lambda st: float(st.filter("changed").count()),
+        static=(sym,),
+        edges=n_edges,
+        metrics=metrics,
+        checkpointer=checkpointer,
+        snapshot=_components,
+    )
+    return _components(state)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

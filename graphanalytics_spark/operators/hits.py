@@ -28,12 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.plans.truncate import LineageTruncator
 
+HARD_EVERY = 4  # hard parquet reset cadence
+
 
 def hits(
     spark: SparkSession,
     edges: DataFrame,
     iterations: int = 5,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Fixed-iteration HITS over a directed weighted edge table.
     Returns DataFrame(vid, authority, hub), both rounded to 9 decimals,
@@ -50,7 +51,7 @@ def hits(
         .distinct()
         .persist()
     )
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
+    truncator = LineageTruncator(spark, hard_every=HARD_EVERY)
     # initial scores are a constant projection over the cached vertex set:
     # no persist of their own (the old per-call cache was never released)
     h = verts.select("vid", F.lit(1.0).alias("score"))

@@ -24,12 +24,54 @@ pair count Σ|C|² from ``connected_components``).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep, change_of
+
+HARD_EVERY = 4  # hard parquet reset cadence of the sweep
+# Two consecutive flat rounds before stopping (r4 advice): in the
+# sparse/linear-counting regime a register update can leave the estimate
+# unchanged for one round while sketches are still growing, so a single
+# flat total is not proof of the fixed point. Balls grow every round until
+# they equal their component, so one extra sweep after true convergence is
+# a no-op, and two flat totals in a row can only happen at the fixed point
+# or at an estimate plateau the single-round break would also have
+# accepted.
+QUIET_ROUNDS = 2
+
+
+def _start(spark: SparkSession, op: str, edges_canon: DataFrame, lg_k: int):
+    """(loop, sym, n_edges, sketches): the sweep's runner, the persisted
+    symmetrized adjacency, its size, and every vertex's seed sketch {v}."""
+    sym = symmetrize(edges_canon).select("src", "dst").persist()
+    n_edges = sym.count()
+    sketches = (
+        sym.select(F.col("src").alias("vid"))
+        .distinct()
+        .groupBy("vid")
+        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
+    )
+    loop = Superstep(spark, op, HARD_EVERY, quiet_rounds=QUIET_ROUNDS)
+    return loop, sym, n_edges, sketches
+
+
+def _union_step(sym: DataFrame, state: DataFrame, *carry) -> DataFrame:
+    """One HyperBall round's sketch union: every vertex's sketch ∪ its
+    neighbors' (hll_union_agg gather, map-side partial union), plus the
+    ``carry`` columns of its state row."""
+    nbr = (
+        sym.join(state, sym.src == state.vid)
+        .groupBy(F.col("dst").alias("vid"))
+        .agg(F.hll_union_agg("sk").alias("nsk"))
+    )
+    return state.join(nbr, "vid", "left").select(
+        "vid",
+        F.when(F.col("nsk").isNull(), F.col("sk"))
+        .otherwise(F.hll_union("sk", "nsk"))
+        .alias("sk"),
+        *carry,
+    )
 
 
 def neighborhood_function(
@@ -37,70 +79,37 @@ def neighborhood_function(
     edges_canon: DataFrame,
     max_t: int = 32,
     lg_k: int = 12,
-    checkpoint_every: int = 4,
 ) -> list[dict]:
-    """Run HyperBall until N(t) stabilizes (or ``max_t``); returns the
-    curve as [{"t": t, "n_pairs_est": float, "wall_s": s}, ...] with t=0
-    counting the |V| self-pairs. The curve is driver-side tiny (one float
-    per round) — the per-vertex sketch table never leaves the cluster."""
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
-
-    state = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .groupBy("vid")
-        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
+    """Run HyperBall until N(t) stabilizes (or ``max_t``, which warns);
+    returns the curve as [{"t": t, "n_pairs_est": float, "wall_s": s}, ...]
+    with t=0 counting the |V| self-pairs. The curve is driver-side tiny
+    (one float per round) — the per-vertex sketch table never leaves the
+    cluster."""
+    loop, sym, n_edges, sketches = _start(spark, "neighborhood_function", edges_canon, lg_k)
+    state = loop.truncate(sketches, 0)
+    totals, measure = change_of(
+        lambda st: float(
+            st.agg(F.sum(F.hll_sketch_estimate("sk")).alias("n")).first()["n"]
+        ),
+        state,
     )
-    state = truncator.truncate(state, 0, stream="hb")
-
-    def total(st: DataFrame) -> float:
-        return float(
-            st.agg(
-                F.sum(F.hll_sketch_estimate("sk")).alias("n")
-            ).first()["n"]
-        )
-
-    curve = [{"t": 0, "n_pairs_est": total(state), "wall_s": 0.0}]
-    flat_rounds = 0
-    for t in range(1, max_t + 1):
-        t0 = time.monotonic()
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
-        )
-        new_state = state.join(nbr, "vid", "left").select(
-            "vid",
-            F.when(
-                F.col("nsk").isNull(), F.col("sk")
-            ).otherwise(F.hll_union("sk", "nsk")).alias("sk"),
-        )
-        new_state = truncator.truncate(new_state, t, stream="hb")
-        n = total(new_state)
-        state = new_state
-        curve.append(
-            {"t": t, "n_pairs_est": n, "wall_s": time.monotonic() - t0}
-        )
-        # Two consecutive flat rounds before stopping (r4 advice): in the
-        # sparse/linear-counting regime a register update can leave the
-        # estimate unchanged for one round while sketches are still
-        # growing, so a single flat total is not proof of the fixed point.
-        # Balls grow every round until they equal their component, so one
-        # extra sweep after true convergence is a no-op, and two flat
-        # totals in a row can only happen at the fixed point or at an
-        # estimate plateau the single-round break would also have accepted.
-        if n == curve[-2]["n_pairs_est"]:
-            flat_rounds += 1
-            if flat_rounds >= 2:
-                # drop the duplicate confirmation round from the curve so
-                # effective_diameter reads the same curve as before
-                curve.pop()
-                break
-        else:
-            flat_rounds = 0
-    sym.unpersist()
+    loop.run(
+        state,
+        lambda state, _t: _union_step(sym, state),
+        max_t,
+        cap="max_t",
+        measure=measure,
+        static=(sym,),
+        edges=n_edges,
+    )
+    curve = [{"t": 0, "n_pairs_est": totals[0], "wall_s": 0.0}] + [
+        {"t": r["iteration"], "n_pairs_est": n, "wall_s": r["wall_s"]}
+        for r, n in zip(loop.metrics.rows, totals[1:])
+    ]
+    if loop.metrics.converged:
+        # drop the duplicate confirmation round from the curve so
+        # effective_diameter reads the same curve as a single-flat stop
+        curve.pop()
     return curve
 
 
@@ -109,7 +118,6 @@ def hyperball_per_vertex(
     edges_canon: DataFrame,
     max_t: int = 32,
     lg_k: int = 12,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Per-vertex centralities from the SAME HyperBall sweep (r4 verdict
     #6): each round's per-vertex ball-size estimate |ball(v,t)| is already
@@ -127,46 +135,26 @@ def hyperball_per_vertex(
     sum_dist 0). In HLL sparse mode (small components) the estimates are
     exact — gated by the brute-force equality test; at scale accuracy is
     the lg_k knob exactly as for the neighborhood function."""
-    sym = symmetrize(edges_canon).select("src", "dst").persist()
-    sym.count()
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
-
-    state = (
-        sym.select(F.col("src").alias("vid"))
-        .distinct()
-        .groupBy("vid")
-        .agg(F.hll_sketch_agg("vid", F.lit(lg_k)).alias("sk"))
-        .select(
+    loop, sym, n_edges, sketches = _start(spark, "hyperball_per_vertex", edges_canon, lg_k)
+    state = loop.truncate(
+        sketches.select(
             "vid",
             "sk",
             F.hll_sketch_estimate("sk").alias("est"),
             F.lit(0.0).alias("harmonic"),
             F.lit(0.0).alias("sum_dist"),
-        )
+        ),
+        0,
     )
-    state = truncator.truncate(state, 0, stream="hbv")
+    _, measure = change_of(
+        lambda st: float(st.agg(F.sum("est").alias("n")).first()["n"]), state
+    )
 
-    def total(st: DataFrame) -> float:
-        return float(st.agg(F.sum("est").alias("n")).first()["n"])
-
-    prev_total = total(state)
-    flat_rounds = 0
-    for t in range(1, max_t + 1):
-        nbr = (
-            sym.join(state, sym.src == state.vid)
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.hll_union_agg("sk").alias("nsk"))
+    def step(state, t):
+        merged = _union_step(
+            sym, state, F.col("est").alias("prev_est"), "harmonic", "sum_dist"
         )
-        merged = state.join(nbr, "vid", "left").select(
-            "vid",
-            F.when(F.col("nsk").isNull(), F.col("sk"))
-            .otherwise(F.hll_union("sk", "nsk"))
-            .alias("sk"),
-            F.col("est").alias("prev_est"),
-            "harmonic",
-            "sum_dist",
-        )
-        new_state = merged.select(
+        return merged.select(
             "vid",
             "sk",
             F.hll_sketch_estimate("sk").alias("est"),
@@ -188,17 +176,10 @@ def hyperball_per_vertex(
                 * F.lit(float(t))
             ).alias("sum_dist"),
         )
-        new_state = truncator.truncate(new_state, t, stream="hbv")
-        n = total(new_state)
-        state = new_state
-        if n == prev_total:
-            flat_rounds += 1
-            if flat_rounds >= 2:
-                break
-        else:
-            flat_rounds = 0
-        prev_total = n
-    sym.unpersist()
+
+    state = loop.run(
+        state, step, max_t, cap="max_t", measure=measure, static=(sym,), edges=n_edges
+    )
     return state.select(
         "vid",
         (F.col("est") - 1.0).alias("n_reachable"),

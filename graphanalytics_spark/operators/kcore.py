@@ -22,18 +22,27 @@ fixed point (extra sweeps are no-ops) — which is what makes the
 fixed-round SQL oracle in ``__spark_entry__`` exact.
 
 Driver-action economics: one count per round (the stop test doubles as
-the lineage-materializing action); per-round lineage is truncated the
-same way as the PageRank/CC loops (plans/truncate.py).
+the lineage-materializing action); the loop is the PageRank/CC superstep
+runner (plans/superstep.py).
 """
 
 from __future__ import annotations
 
-import time
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep, change_of
+
+HARD_EVERY = 4  # hard parquet reset cadence of the peel loop
+
+
+def _degrees(active: DataFrame) -> DataFrame:
+    """(vid, core_degree) over the edge set ``active``."""
+    return (
+        active.select(F.col("src").alias("vid"))
+        .unionAll(active.select(F.col("dst").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count("*").alias("core_degree"))
+    )
 
 
 def kcore(
@@ -41,7 +50,6 @@ def kcore(
     edges_canon: DataFrame,
     k: int,
     max_rounds: int = 100,
-    checkpoint_every: int = 4,
     metrics=None,
 ) -> DataFrame:
     """Vertices of the k-core with their within-core degree:
@@ -54,52 +62,30 @@ def kcore(
     change the keep set, so the peel has converged. If ``max_rounds`` is
     exhausted before that (a pathological onion at this k), the result is
     a supergraph of the true k-core; that truncation warns loudly instead
-    of returning silently. ``metrics`` rows carry
+    of returning silently (plans/superstep.py). ``metrics`` rows carry
     (round, edges_dropped, surviving_edges, wall_s) — the surviving EDGE
     count in the edges slot, so derived edges/s throughput is honest."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     active = edges_canon.select("src", "dst").persist()
-    n_edges = active.count()  # one-time setup action
-    first = active
-    converged = n_edges == 0
+    surviving, dropped = change_of(lambda st: st.count(), active)  # setup count
 
-    for rnd in range(1, max_rounds + 1):
-        if converged:
-            break
-        t0 = time.monotonic()
-        ends = active.select(F.col("src").alias("vid")).unionAll(
-            active.select(F.col("dst").alias("vid"))
-        )
-        deg = ends.groupBy("vid").agg(F.count("*").alias("core_degree"))
-        keep = deg.filter(F.col("core_degree") >= k).select("vid")
-        nxt = active.join(
+    def step(active, _rnd):
+        keep = _degrees(active).filter(F.col("core_degree") >= k).select("vid")
+        return active.join(
             keep.withColumnRenamed("vid", "src"), "src", "left_semi"
         ).join(keep.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-        nxt = truncator.truncate(nxt, rnd, stream="kcore")
-        n_next = nxt.count()
-        if metrics is not None:
-            metrics.add(
-                rnd, float(n_edges - n_next), n_next, time.monotonic() - t0
-            )
-        converged = n_next == n_edges
-        n_edges = n_next
-        active = nxt
-    if not converged:
-        warnings.warn(
-            f"kcore(k={k}) stopped at max_rounds={max_rounds} before the "
-            "peel fixed point: the result is a SUPERGRAPH of the true "
-            "k-core. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
 
-    result = (
-        active.select(F.col("src").alias("vid"))
-        .unionAll(active.select(F.col("dst").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("core_degree"))
-    )
-    first.unpersist()
-    return result
+    if surviving[0]:  # an empty edge set is its own fixed point
+        active = Superstep(spark, f"kcore(k={k})", HARD_EVERY).run(
+            active,
+            step,
+            max_rounds,
+            cap="max_rounds",
+            measure=dropped,
+            edges=lambda: surviving[-1],
+            metrics=metrics,
+        )
+    else:
+        active.unpersist()
+    return _degrees(active)

@@ -32,17 +32,17 @@ exactly once, so the per-edge support attribution and the peel fixed
 point are unchanged, and ids map back to canonical src<dst on return.
 Termination is edge-count based
 (no edges dropped ⇒ supports unchanged ⇒ fixed point); exhausting
-``max_rounds`` first warns loudly and returns the supergraph.
+``max_rounds`` first warns loudly and returns the supergraph
+(plans/superstep.py).
 """
 
 from __future__ import annotations
 
-import time
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep, change_of
+
+HARD_EVERY = 4  # hard parquet reset cadence of the peel loop
 
 
 def _support(active: DataFrame) -> DataFrame:
@@ -105,7 +105,6 @@ def ktruss(
     edges_canon: DataFrame,
     k: int,
     max_rounds: int = 50,
-    checkpoint_every: int = 4,
     metrics=None,
 ) -> DataFrame:
     """Edges of the k-truss with their within-truss support:
@@ -116,49 +115,37 @@ def ktruss(
     if k < 2:
         raise ValueError("k must be >= 2 (k=2 keeps every edge)")
     need = k - 2
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
     # peel in (degree, id)-oriented space: bounds every round's wedge
     # fan-out by O(√m) where the former src<dst id-orientation was
     # quadratic on a mid-id mega-hub; ids are mapped back on return
     active = _orient_by_degree(edges_canon).persist()
-    n_edges = active.count()
-    first = active
-    converged = n_edges == 0 or need == 0
+    surviving, dropped = change_of(lambda st: st.count(), active)
 
-    for rnd in range(1, max_rounds + 1):
-        if converged:
-            break
-        t0 = time.monotonic()
+    def step(active, _rnd):
         sup = _support(active)
-        nxt = (
+        return (
             active.join(sup, ["src", "dst"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= need)
             .select("src", "dst")
         )
-        nxt = truncator.truncate(nxt, rnd, stream="ktruss")
-        n_next = nxt.count()
-        if metrics is not None:
-            metrics.add(
-                rnd, float(n_edges - n_next), n_next, time.monotonic() - t0
-            )
-        converged = n_next == n_edges
-        n_edges = n_next
-        active = nxt
-    if not converged:
-        warnings.warn(
-            f"ktruss(k={k}) stopped at max_rounds={max_rounds} before the "
-            "peel fixed point: the result is a SUPERGRAPH of the true "
-            "k-truss. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
+
+    if surviving[0] and need:  # else the input is its own fixed point
+        active = Superstep(spark, f"ktruss(k={k})", HARD_EVERY).run(
+            active,
+            step,
+            max_rounds,
+            cap="max_rounds",
+            measure=dropped,
+            edges=lambda: surviving[-1],
+            metrics=metrics,
         )
+    else:
+        active.unpersist()
 
     sup = _support(active)
-    result = active.join(sup, ["src", "dst"], "left").select(
+    return active.join(sup, ["src", "dst"], "left").select(
         # map back to the canonical src<dst id orientation
         F.least("src", "dst").alias("src"),
         F.greatest("src", "dst").alias("dst"),
         F.coalesce(F.col("support"), F.lit(0)).alias("support"),
     )
-    first.unpersist()
-    return result

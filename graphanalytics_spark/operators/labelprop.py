@@ -20,61 +20,51 @@ aggregation of the struct-max (max is algebraic).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep, shuffle_partitions
+
+# Hard parquet reset every 8 sweeps (was 5): the every-2-sweep stop-test
+# count already finalizes the lazy localCheckpoints; order-balanced 5-vs-8
+# A/B had 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
+HARD_EVERY = 8
+
+
+def _labels(state: DataFrame) -> DataFrame:
+    return state.select("vid", "label")
 
 
 def label_propagation(
     spark: SparkSession,
     edges_canon: DataFrame,
     max_iter: int = 20,
-    checkpoint_every: int = 8,
-    partitions: int | None = None,
     metrics=None,
     initial_state: DataFrame | None = None,
     checkpointer=None,
     check_every: int = 2,
 ) -> DataFrame:
     """Returns DataFrame(vid: long, label: long). Labels initialized to
-    vid; converges when no label changes in a sweep or max_iter reached.
+    vid; converges when no label changes in a sweep or max_iter reached
+    (the latter warns, plans/superstep.py).
     ``initial_state``/``checkpointer`` give kill-and-resume semantics.
     ``check_every``: the no-change stop test runs every k sweeps (sweeps
     are idempotent on a converged labeling, so semantics are unchanged —
     same driver-action economics as pagerank/components)."""
-    sym = symmetrize(edges_canon)
-    if partitions is None:
-        try:
-            partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            partitions = spark.sparkContext.defaultParallelism
-    if partitions:
-        # static side partitioned on the gather key once (pagerank policy)
-        sym = sym.repartition(partitions, "src")
-    sym = sym.persist()
+    # static side partitioned on the gather key once (pagerank policy)
+    sym = symmetrize(edges_canon).repartition(shuffle_partitions(spark), "src").persist()
     n_edges = sym.count()
-    # hard cadence 8 (was 5): the every-2-sweep stop-test count already
-    # finalizes the lazy localCheckpoints; order-balanced 5-vs-8 A/B had
-    # 8 faster in all four pairs (3.0-3.2 vs 3.2-4.0 s warm at sf0.1)
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
-    check_every = max(1, check_every)
 
     if initial_state is not None:
-        state = initial_state.select("vid", "label").persist()
+        state = initial_state.select("vid", "label")
     else:
         state = (
             sym.select(F.col("src").alias("vid"))
             .distinct()
             .select("vid", F.col("vid").alias("label"))
-            .persist()
         )
-    init_state = state
 
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
+    def step(state, _it):
         # gather: per (vertex, neighbor-label) summed weight, then argmax
         # with ties to the smaller label via max(struct(w, -label)).
         nbr = (
@@ -85,26 +75,21 @@ def label_propagation(
         best = nbr.groupBy(F.col("v").alias("vid")).agg(
             F.max(F.struct(F.col("w"), (-F.col("nlabel")).alias("neg"))).alias("m")
         ).select("vid", (-F.col("m.neg")).alias("new_label"))
-        new_state = (
-            state.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-            )
+        return state.join(best, "vid", "left").select(
+            "vid",
+            F.coalesce("new_label", "label").alias("label"),
+            (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
         )
-        # per-iteration lineage truncation (see plans/truncate.py)
-        new_state = truncator.truncate(new_state, it, stream="state")
-        n_changed = -1
-        if it % check_every == 0 or it == max_iter:
-            n_changed = new_state.filter("changed").count()
-        state = new_state.drop("changed")
-        if metrics is not None:
-            metrics.add(it, float(n_changed), n_edges, time.monotonic() - t0)
-        if checkpointer is not None:
-            checkpointer.maybe_save(it, state, float(n_changed))
-        if n_changed == 0:
-            break
-    init_state.unpersist()
-    sym.unpersist()
-    return state.select("vid", "label")
+
+    state = Superstep(spark, "label_propagation", HARD_EVERY, check_every).run(
+        state.persist(),
+        step,
+        max_iter,
+        measure=lambda st: float(st.filter("changed").count()),
+        static=(sym,),
+        edges=n_edges,
+        metrics=metrics,
+        checkpointer=checkpointer,
+        snapshot=_labels,
+    )
+    return _labels(state)

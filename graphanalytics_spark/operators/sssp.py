@@ -29,12 +29,19 @@ counts or reciprocal affinities).
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from graphanalytics_spark.graph import symmetrize
-from graphanalytics_spark.plans.truncate import LineageTruncator
+from graphanalytics_spark.plans.superstep import Superstep
+
+HARD_EVERY = 4  # hard parquet reset cadence of the relaxation loop
+
+
+def _frontier(state: DataFrame) -> DataFrame:
+    """Vertices whose distance improved in the last round."""
+    return state.filter(F.coalesce(F.col("_improved"), F.lit(False))).select(
+        "vid", "dist"
+    )
 
 
 def sssp(
@@ -43,11 +50,12 @@ def sssp(
     source: int,
     directed: bool = False,
     max_rounds: int = 200,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Shortest weighted distance from ``source``: DataFrame(vid, dist)
     over reachable vertices (dist(source) = 0). Undirected by default
-    (edges symmetrized); weights must be non-negative."""
+    (edges symmetrized); weights must be non-negative. Exhausting
+    ``max_rounds`` with relaxations still improving warns
+    (plans/superstep.py): the distances are then UPPER BOUNDS."""
     adj = (
         edges.select("src", "dst", "weight")
         if directed
@@ -56,15 +64,15 @@ def sssp(
     if adj.filter(F.col("weight") < 0).limit(1).count() > 0:
         adj.unpersist()
         raise ValueError("sssp requires non-negative edge weights")
-    truncator = LineageTruncator(spark, hard_every=checkpoint_every or 4)
 
+    # the state carries the last round's improved flag: its frontier is
+    # the next round's relaxation set (the source alone at round 1)
     state = spark.createDataFrame(
-        [(int(source), 0.0)], "vid long, dist double"
+        [(int(source), 0.0, True)], "vid long, dist double, _improved boolean"
     ).localCheckpoint(eager=True)
-    frontier = state
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
+
+    def step(state, _rnd):
+        frontier = _frontier(state)
         cand = (
             frontier.join(adj, frontier.vid == adj.src)
             .select(
@@ -74,7 +82,7 @@ def sssp(
             .groupBy("vid")
             .agg(F.min("nd").alias("nd"))
         )
-        merged = state.join(cand, "vid", "full_outer").select(
+        return state.select("vid", "dist").join(cand, "vid", "full_outer").select(
             "vid",
             F.least(
                 F.coalesce(F.col("dist"), F.lit(float("inf"))),
@@ -84,25 +92,13 @@ def sssp(
                 F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
             ).alias("_improved"),
         )
-        merged = truncator.truncate(merged, rounds, stream="sssp")
-        improved = merged.filter(
-            F.coalesce(F.col("_improved"), F.lit(False))
-        ).select("vid", "dist")
-        n_improved = improved.count()
-        state = merged.select("vid", "dist")
-        if n_improved == 0:
-            break
-        frontier = improved
-    else:
-        # the loop exhausted max_rounds with relaxations still improving:
-        # distances are an overestimate (same loud-truncation contract as
-        # kcore/ktruss — r5 ADVICE #1)
-        warnings.warn(
-            f"sssp stopped at max_rounds={max_rounds} before the relaxation "
-            "fixed point: returned distances are UPPER BOUNDS, not exact "
-            "shortest distances. Raise max_rounds.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    adj.unpersist()
-    return state
+
+    state = Superstep(spark, "sssp", HARD_EVERY).run(
+        state,
+        step,
+        max_rounds,
+        cap="max_rounds",
+        measure=lambda st: float(_frontier(st).count()),
+        static=(adj,),
+    )
+    return state.select("vid", "dist")

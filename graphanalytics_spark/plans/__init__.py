@@ -1,1 +1,2 @@
-"""Run-plan infrastructure: checkpoint/lineage/resume and metrics."""
+"""Run-plan infrastructure: the superstep loop, lineage truncation,
+checkpoint/resume and skew spreading."""

@@ -6,9 +6,17 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from graphanalytics_spark import graph
-from graphanalytics_spark.operators import triangles
+from graphanalytics_spark import fixtures, graph
+from graphanalytics_spark.operators import (
+    components,
+    hyperball,
+    labelprop,
+    pagerank,
+    triangles,
+)
 from graphanalytics_spark.operators.kcore import kcore
+from graphanalytics_spark.operators.ktruss import ktruss
+from graphanalytics_spark.operators.sssp import sssp
 
 
 def _random_pairs(n=50, p=0.12, seed=11):
@@ -545,23 +553,115 @@ def test_hits_rejects_zero_iterations(spark):
         hits(spark, df, iterations=0)
 
 
-def test_sssp_warns_on_max_rounds_truncation(spark):
-    """ADVICE r5 #1: exhausting max_rounds before the relaxation fixed
-    point must warn loudly (distances are upper bounds), mirroring the
-    kcore/ktruss truncation contract."""
-    from graphanalytics_spark.operators.sssp import sssp
+def _louvain_phase(spark, df, rounds):
+    from graphanalytics_spark.operators.louvain import louvain
 
-    path = [(i, i + 1, 1.0) for i in range(6)]
-    df = spark.createDataFrame(path, "src long, dst long, weight double")
-    with pytest.warns(RuntimeWarning, match="max_rounds"):
-        sssp(spark, df, source=0, max_rounds=2)
-    # and a converged run must NOT warn
+    phases = []
+    louvain(spark, df, max_phases=1, max_rounds_per_phase=rounds, metrics=phases)
+    return phases
+
+
+def _ring_pr(spark, fn, **kw):
+    """PageRank-family converged run: on a directed 8-ring both ways the
+    uniform seed state is already stationary."""
+    ring = [(i, (i + 1) % 8, 1.0) for i in range(8)]
+    df = spark.createDataFrame(
+        ring + [(b, a, w) for a, b, w in ring], "src long, dst long, weight double"
+    )
+    return fn(spark, df, **kw).collect()
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(v,) for v in range(8)], "vid long")
+
+
+# (cap, truncated call, converged call) per ported operator; the loud ones
+# name the operator and its cap in the warning
+_TRUNCATION_CASES = {
+    "pagerank": ("max_iter", lambda sp, df: pagerank.pagerank(sp, df, max_iter=2),
+                 lambda sp, df: _ring_pr(sp, pagerank.pagerank)),
+    "pagerank_csr": ("max_iter", lambda sp, df: pagerank.pagerank_csr(sp, df, max_iter=2),
+                     lambda sp, df: _ring_pr(sp, pagerank.pagerank_csr)),
+    "personalized_pagerank": (
+        "max_iter",
+        lambda sp, df: pagerank.personalized_pagerank(sp, df, _seeds(sp), max_iter=2),
+        lambda sp, df: _ring_pr(sp, pagerank.personalized_pagerank, seeds=_seeds(sp))),
+    "connected_components": (
+        "max_iter", lambda sp, df: components.connected_components(sp, df, max_iter=1),
+        lambda sp, df: components.connected_components(sp, df)),
+    "label_propagation": (
+        "max_iter", lambda sp, df: labelprop.label_propagation(sp, df, max_iter=1),
+        # synchronous LPA oscillates on a path (a bipartite graph)
+        lambda sp, df: labelprop.label_propagation(
+            sp, fixtures.edges_df(sp, fixtures.TWO_TRIANGLES_BRIDGE))),
+    "kcore": ("max_rounds", lambda sp, df: kcore(sp, df, k=2, max_rounds=1),
+              lambda sp, df: kcore(sp, df, k=2)),
+    "ktruss": ("max_rounds", lambda sp, df: ktruss(sp, df, k=3, max_rounds=1),
+               lambda sp, df: ktruss(sp, df, k=3)),
+    "sssp": ("max_rounds", lambda sp, df: sssp(sp, df, source=0, max_rounds=2),
+             lambda sp, df: sssp(sp, df, source=0)),
+    "neighborhood_function": (
+        "max_t", lambda sp, df: hyperball.neighborhood_function(sp, df, max_t=1),
+        lambda sp, df: hyperball.neighborhood_function(sp, df)),
+    "hyperball_per_vertex": (
+        "max_t", lambda sp, df: hyperball.hyperball_per_vertex(sp, df, max_t=1),
+        lambda sp, df: hyperball.hyperball_per_vertex(sp, df)),
+    # a capped Louvain phase still returns a valid partition whose Q is
+    # reported: it records converged=False in its phase metrics, silently
+    "louvain": (None, lambda sp, df: _louvain_phase(sp, df, rounds=1),
+                lambda sp, df: _louvain_phase(sp, df, rounds=20)),
+}
+
+
+@pytest.fixture
+def superstep_runs(monkeypatch):
+    """The IterationMetrics of every superstep run made during a test."""
+    from graphanalytics_spark.plans.superstep import Superstep
+
+    runs, run = [], Superstep.run
+
+    def recording_run(self, *args, **kwargs):
+        out = run(self, *args, **kwargs)
+        runs.append(self.metrics)
+        return out
+
+    monkeypatch.setattr(Superstep, "run", recording_run)
+    return runs
+
+
+@pytest.mark.parametrize("op", list(_TRUNCATION_CASES))
+def test_iterative_operators_report_truncation(spark, superstep_runs, op):
+    """Every superstep operator reports a run that exhausts its cap
+    before its stop test passes: converged=False plus one RuntimeWarning
+    naming the operator and the cap (ADVICE r5 #1: SSSP distances are then
+    upper bounds, k-core/k-truss results supergraphs) — and a converged
+    run does not warn."""
     import warnings as _w
 
+    cap, truncated, converged = _TRUNCATION_CASES[op]
+    path = [(i, i + 1, 1.0) for i in range(7)]
+    df = spark.createDataFrame(path, "src long, dst long, weight double")
+    if cap is None:
+        with _w.catch_warnings():
+            _w.simplefilter("error", RuntimeWarning)
+            assert [p["converged"] for p in truncated(spark, df)] == [False]
+    else:
+        with pytest.warns(RuntimeWarning, match=cap) as rec:
+            truncated(spark, df)
+        loud = [w for w in rec if w.category is RuntimeWarning]
+        assert len(loud) == 1 and str(loud[0].message).startswith(op), [
+            str(w.message) for w in rec
+        ]
+    assert superstep_runs[-1].converged is False
+    # and a converged run must NOT warn
     with _w.catch_warnings():
         _w.simplefilter("error", RuntimeWarning)
-        got = {r["vid"]: r["dist"] for r in sssp(spark, df, source=0).collect()}
-    assert got[6] == 6.0
+        got = converged(spark, df)
+    assert superstep_runs[-1].converged is True
+    if op == "sssp":
+        assert {r["vid"]: r["dist"] for r in got.collect()}[7] == 7.0
+    if op == "louvain":
+        assert [p["converged"] for p in got] == [True]
 
 
 def test_betweenness_warns_on_depth_truncation(spark):
